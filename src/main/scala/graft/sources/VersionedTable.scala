@@ -359,10 +359,11 @@ object VersionedTable {
     "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
       .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
 
-  /** Table schema carried by version `v`'s manifest (evolving tables
-    * only — see [[commitPartitions]]' schemaDdl): the read schema that
-    * makes files written BEFORE a widen serve the added columns as
-    * NULLs. None for manifests that never stored one. */
+  /** Table schema carried by version `v`'s manifest (see
+    * [[commitPartitionsOnce]]' schemaDdl): the read schema that makes
+    * files written BEFORE a widen serve the added columns as NULLs,
+    * and that spares every read a schema-inference job. None for
+    * manifests that never stored one. */
   def manifestSchema(spark: SparkSession, root: String, v: Int)
       : Option[org.apache.spark.sql.types.StructType] =
     schemaDdlOf(Files.readString(versionFile(root, v)))
@@ -556,25 +557,39 @@ object VersionedTable {
     rel
   }
 
+  /** The write-task count of a partitioned stage when the caller
+    * names none: one per core. An explicit count is what keeps AQE
+    * from coalescing a small write shuffle down to ONE task that
+    * writes every touched partition serially. */
+  private[graft] def writeTasks(spark: SparkSession): Int =
+    spark.sparkContext.defaultParallelism
+
   /** Stage `df` partitioned by integer column `partCol` — ONE Spark
     * job for however many partitions the frame touches (each becomes
     * a `pid=<k>` subdir of one fresh uuid dir, and each subdir is an
-    * independent commit unit for [[commitPartitions]]). The frame is
-    * hash-repartitioned on `partCol` first so a partition's rows
-    * co-locate into one task → one file per touched partition; at
-    * cluster scale raise `tasksPerWrite` so large batches spread over
-    * more writers (more, smaller files per partition — compact()
-    * owns the file-count budget either way). Returns partition label
-    * → relative dir, only for partitions the frame actually touched. */
+    * independent commit unit for [[commitPartitions]]). Steps:
+    *  1. hash-arrange the frame as `repartition(n, partCol)` with
+    *     `n = tasksPerWrite`, or [[writeTasks]] when that is 0 — a
+    *     partition's rows co-locate into one task, so each touched
+    *     partition gets one file, and up to `n` tasks write in
+    *     parallel (AQE never coalesces an explicit count);
+    *  2. a frame that already arrives hash-partitioned on `partCol`
+    *     with the same count (the merge's aggregate) keeps its
+    *     layout — Spark drops the now-redundant exchange;
+    *  3. one partitioned parquet write, then the `partCol=` subdirs
+    *     are renamed to the canonical `pid=` labels.
+    * At cluster scale raise `tasksPerWrite` so large batches spread
+    * over more writers (compact() owns the file-count budget). Returns
+    * partition label → relative dir, only for partitions the frame
+    * actually touched. */
   private[graft] def stagePartitioned(df: DataFrame, root: String,
       partCol: String, tasksPerWrite: Int = 0): Map[String, String] = {
     import org.apache.spark.sql.functions.col
     val rel = s"data/${UUID.randomUUID()}"
     val out = Paths.get(root, rel)
-    val arranged =
-      if (tasksPerWrite > 0) df.repartition(tasksPerWrite, col(partCol))
-      else df.repartition(col(partCol))
-    arranged.write.partitionBy(partCol).parquet(out.toString)
+    val n = if (tasksPerWrite > 0) tasksPerWrite else writeTasks(df.sparkSession)
+    df.repartition(n, col(partCol))
+      .write.partitionBy(partCol).parquet(out.toString)
     val ls = Files.list(out)
     val subdirs =
       try ls.iterator.asScala.map(_.getFileName.toString)
@@ -610,10 +625,11 @@ object VersionedTable {
     * a partitioned table); otherwise this throws rather than silently
     * dropping the flat dirs.
     *
-    * @param schemaDdl evolving tables store their CURRENT logical
+    * @param schemaDdl the CDC targets store their CURRENT logical
     *   schema in every manifest so (a) readers serve pre-widen files
-    *   with the added columns as NULLs and (b) a restarted writer
-    *   reloads the evolved schema from the table itself. */
+    *   with the added columns as NULLs, (b) a restarted evolving
+    *   writer reloads the evolved schema from the table itself, and
+    *   (c) reads run no schema-inference job. */
   def commitPartitionsOnce(stagedParts: Map[String, String], root: String,
       expected: Int, overwriteAll: Boolean = false,
       txn: Option[Long] = None, schemaDdl: Option[String] = None,
@@ -903,10 +919,10 @@ object VersionedTable {
       throw new IllegalStateException(s"no committed version under $root")))
 
   /** Time travel: the table exactly as of version `v`. A manifest
-    * that carries a schema (evolving tables) is read UNDER it — data
-    * dirs written before a widen then serve the later columns as
-    * typed NULLs instead of the footer-sampled schema silently
-    * dropping them. */
+    * that carries a schema (the CDC targets' tables) is read UNDER it,
+    * with no schema-inference job — data dirs written before a widen
+    * then serve the later columns as typed NULLs instead of the
+    * footer-sampled schema silently dropping them. */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
     val paths = manifestDirs(root, v)
       .map(rel => Paths.get(root, rel).toString)
@@ -1026,10 +1042,15 @@ object VersionedTable {
     val schema = manifestSchema(spark, root, head)
     val keyLit = schema.flatMap(_.fields.find(_.name == pk))
       .map(f => lit(value).cast(f.dataType)).getOrElse(lit(value))
-    // one-row local projection: evaluates the SAME codegen'd hash the
-    // writers use — never reimplement the key→pid arithmetic
-    val label = spark.range(1)
-      .select(pmod(hash(keyLit), lit(p)).cast("int")).head().getInt(0)
+    // the SAME Catalyst pmod(hash(..)) the writers use — never
+    // reimplement the key→pid arithmetic — projected over a one-row
+    // LOCAL relation: the optimizer folds the literal projection into
+    // the relation, so the driver computes the label and no job runs
+    val one = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row()),
+      new org.apache.spark.sql.types.StructType())
+    val label = one.select(pmod(hash(keyLit), lit(p)).cast("int"))
+      .collect()(0).getInt(0)
     pm.get(label.toString) match {
       case None => readAt(spark, root, head).limit(0)
       case Some(dirs) =>
@@ -1613,6 +1634,66 @@ object VersionedTable {
     Nil // unreachable
   }
 
+  // ---- writer intent: maintenance yields to data commits ---------
+
+  private def intentsDir(root: String): Path = Paths.get(root, "_intents")
+
+  /** How long an unrenewed writer-intent marker counts as live: a
+    * writer that died without removing its marker delays rescales of
+    * its table by at most this long. */
+  private val intentLeaseMillis = 10 * 60 * 1000L
+
+  /** Markers the CURRENT thread holds: a thread never waits on its
+    * own intent (a rescale run from inside a writer's stage→commit
+    * window would otherwise wait for itself). */
+  private val heldIntents = ThreadLocal.withInitial[Set[Path]](() => Set.empty)
+
+  /** Run a data writer's layout-read → stage → commit body under a
+    * WRITER-INTENT marker (`_intents/<uuid>` under the table root),
+    * removed when the body ends. [[rescalePartitions]] yields to any
+    * live marker, so a partition-count change never lands on a merge
+    * that is in flight. The body gets a `renew` callback that restarts
+    * the marker's lease; call it at the start of each restage. */
+  private[graft] def withWriterIntent[T](root: String)(
+      body: (() => Unit) => T): T = {
+    val dir = intentsDir(root)
+    Files.createDirectories(dir)
+    val marker = Files.createFile(dir.resolve(UUID.randomUUID().toString))
+    heldIntents.set(heldIntents.get + marker)
+    try body(() => Files.setLastModifiedTime(marker,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())))
+    finally {
+      heldIntents.set(heldIntents.get - marker)
+      Files.deleteIfExists(marker)
+    }
+  }
+
+  /** Some OTHER thread or process holds a live writer intent. */
+  private def writerActive(root: String): Boolean = {
+    val dir = intentsDir(root)
+    if (!Files.isDirectory(dir)) return false
+    val cutoff = System.currentTimeMillis() - intentLeaseMillis
+    val own = heldIntents.get
+    val ls = Files.list(dir)
+    try ls.iterator.asScala.exists { f =>
+      !own.contains(f) &&
+        (try Files.getLastModifiedTime(f).toMillis > cutoff
+         catch { case _: java.nio.file.NoSuchFileException => false })
+    } finally ls.close()
+  }
+
+  /** Maintenance's side of the intent protocol: a live writer intent
+    * is a commit race already lost — wait until the writer has
+    * committed (head past `base`) or let go of its intent, then
+    * surface [[ConcurrentCommit]] so the caller's retry loop rebases
+    * on the writer's result. */
+  private def yieldToWriters(root: String, base: Int): Unit =
+    if (writerActive(root)) {
+      while (writerActive(root) && versions(root).lastOption.exists(_ <= base))
+        Thread.sleep(10)
+      throw new ConcurrentCommit(base + 1)
+    }
+
   /** PARTITION-COUNT EVOLUTION (the Iceberg partition-spec-evolution
     * analog for this manifest format — VERDICT r12 item 1): one Spark
     * job re-hashes every live row into `newP` key-hash partitions and
@@ -1623,14 +1704,22 @@ object VersionedTable {
     * back toward O(table).
     *
     * Safety against concurrent writers, both directions:
-    *  - rescale loses a commit race → rebase-on-race as in
-    *    [[compactPartitions]]: re-read the head (racer's merge
-    *    included) and restage — the writer always wins;
-    *  - a writer loses to rescale → its staged dirs were hashed under
-    *    the OLD count; [[commitPartitionsOnce]]'s count guard throws
+    *  - a data writer holds a [[withWriterIntent]] marker from its
+    *    layout read to its commit; rescale treats a live marker as a
+    *    commit race it has ALREADY lost — it waits for the writer to
+    *    commit or finish, then rebases (re-reads the head, racer's
+    *    merge included, and restages). It checks before staging and
+    *    again right before its commit, so the writer wins by design,
+    *    not by timing;
+    *  - rescale loses a plain commit race → the same rebase, as in
+    *    [[compactPartitions]];
+    *  - the one window left — a writer taking its layout read after
+    *    rescale's last check — costs that writer one restage:
+    *    [[commitPartitionsOnce]]'s count guard throws
     *    [[PartitionCountChanged]] and the writer restages under the
     *    new stamp (PartitionedMerge's outer loop) instead of merging
-    *    wrong-layout dirs.
+    *    wrong-layout dirs; its intent is then already live, so no
+    *    rescale can land on it again.
     *
     * The manifest schema rides the commit (evolving tables keep their
     * restart-reload contract), and downstream [[changes]] across the
@@ -1665,6 +1754,7 @@ object VersionedTable {
         val df = reader.parquet(dirs: _*)
         require(!df.columns.contains(PidCol),
           s"'$PidCol' is the reserved internal partition column")
+        yieldToWriters(root, base)
         val staged = stagePartitioned(
           df.withColumn(PidCol, keyPid(pk, newP)), root, PidCol, tasksPerWrite)
         // per attempt, like compactPartitions: a lost race's staged
@@ -1672,6 +1762,7 @@ object VersionedTable {
         // not bills)
         meter.foreach(_.add(pipeline, root, "table_copy",
           stagedPartBytes(root, staged)))
+        yieldToWriters(root, base)
         return commitPartitionsOnce(staged, root, base,
           overwriteAll = true, schemaDdl = schema.map(_.toDDL),
           nParts = Some(newP), writerKind = KindMaintenance)
@@ -1694,7 +1785,9 @@ object VersionedTable {
     * each at least halves the mean — so a steadily growing table pays
     * O(log growth) full rewrites over its life. Run it where
     * [[compactPartitions]] runs (the table-maintenance loop); returns
-    * the (oldP, newP) transition or None when under budget. */
+    * the (oldP, newP) transition, or None when under budget or when
+    * data writers kept the rescale from committing (it yields to
+    * them; the next maintenance tick checks again). */
   def rescaleIfNeeded(spark: SparkSession, root: String, pk: String,
       targetBytesPerPart: Long, tasksPerWrite: Int = 0,
       maxAttempts: Int = 5,
@@ -1735,6 +1828,9 @@ object VersionedTable {
           meter, pipeline)
         return Some((p, newP.toInt))
       } catch {
+        // writers kept committing through every attempt: maintenance
+        // yields to data, and the next tick re-runs the check
+        case _: ConcurrentCommit => return None
         // a file vanishing mid-walk surfaces from Files.walk as
         // UncheckedIOException(NoSuchFileException) — same race,
         // same rebase (see raceGuard in commitPartitionsOnce)

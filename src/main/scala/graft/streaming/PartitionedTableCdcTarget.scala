@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.VersionedTable
 
@@ -16,18 +15,25 @@ import graft.sources.VersionedTable
   *
   * Layout: rows live under `pid = pmod(hash(user_id), numPartitions)`
   * dirs; the manifest maps pid → live dir, and each merge:
-  *  1. computes the batch's touched pids (one distinct over a batch
-  *     that is already micro-batch sized — the result is bounded by
-  *     `numPartitions`, a control-plane cell frame);
-  *  2. reads ONLY the touched partitions' current dirs, unions the
-  *     batch, and keeps latest-per-key under the (ts, event_id)
-  *     sequence order — the same one-aggregation merge+guard as the
-  *     copy-on-write form, now over O(touched) data;
-  *  3. stages the merged partitions in ONE partitioned write and
-  *     publishes via [[VersionedTable.commitPartitions]] — untouched
-  *     partitions' dirs ride into the new manifest verbatim, never
-  *     rewritten, so write amplification is O(batch keys × partition
-  *     size), independent of table size.
+  *  1. computes the batch's touched pids (a per-partition local
+  *     distinct over the micro-batch: one job, no shuffle — the result
+  *     is bounded by `numPartitions`, a control-plane cell frame);
+  *  2. reads ONLY the touched partitions' current dirs under the
+  *     fixed [[PartitionedTableCdcTarget.Schema]] (no schema-inference
+  *     job), unions the batch, and keeps latest-per-key under the
+  *     (ts, event_id) sequence order — the same one-aggregation
+  *     merge+guard as the copy-on-write form, now over O(touched)
+  *     data, behind ONE shuffle by pid;
+  *  3. stages the merged partitions in ONE partitioned write, up to
+  *     one task per core, and publishes via
+  *     [[VersionedTable.commitPartitions]] — untouched partitions'
+  *     dirs ride into the new manifest verbatim, never rewritten, so
+  *     write amplification is O(batch keys × partition size),
+  *     independent of table size. The commit stamps the schema, so
+  *     [[snapshot]], [[VersionedTable.read]] and
+  *     [[VersionedTable.readKey]] read under it without inference
+  *     too; a table written before the stamp gains it on its next
+  *     merge.
   *
   * Sizing: `numPartitions` bounds the per-merge rewrite at
   * table/numPartitions bytes per touched key-bucket — size it so a
@@ -55,13 +61,23 @@ class PartitionedTableCdcTarget(spark: SparkSession, root: String,
     * count is TABLE state (the manifest stamp wins over the
     * constructor after the first commit), and a merge racing a
     * rescale restages inside the core. */
-  override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit =
+  override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit = {
+    import PartitionedTableCdcTarget.Schema
     PartitionedMerge.merge(spark, root, batchId, rows.toDF(),
       pk = "user_id", seqCols = Seq("ts", "event_id"),
-      cols = Seq("user_id", "event_id", "ts", "value", "is_deleted"),
-      configuredP = numPartitions, migrateFlat = true)
+      cols = Schema.fieldNames.toSeq, configuredP = numPartitions,
+      readSchema = Some(Schema), schemaDdl = Some(Schema.toDDL),
+      migrateFlat = true)
+  }
 
   /** Live rows (tombstones excluded), as of the latest commit. */
   def snapshot: DataFrame =
     VersionedTable.read(spark, root).filter(!col("is_deleted"))
+}
+
+object PartitionedTableCdcTarget {
+  /** The table schema, [[CdcApplied]]'s columns as stored: nullable,
+    * as every parquet column reads back. */
+  val Schema: StructType = StructType(
+    Encoders.product[CdcApplied].schema.map(_.copy(nullable = true)))
 }

@@ -305,63 +305,67 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
             followSrc = Some(sid),
             writerKind = VersionedTable.KindFollower)
         } else {
-          // restage loop (PartitionedMerge's twin): a DESTINATION
-          // rescale landing inside this stage→commit window means the
+          // restage loop (PartitionedMerge's twin), under a writer
+          // intent a destination rescale yields to: a rescale that
+          // still lands inside this stage→commit window means the
           // staged dirs hash under a dead count — re-read the stamp
           // and restage instead of failing the tick
-          var attempt = 0
-          var done = false
-          while (!done) {
-            attempt += 1
-            val pNow = effP
-            val withP = withPid(delta, pNow)
-            val touched = withP.select(Pid).distinct().collect()
-              .map(_.getInt(0)).toSet // bounded by the partition count
-            // the rows coming back in: insert/update post-images,
-            // through the derivation — a post-image the transform
-            // filters out simply doesn't return, which IS the derived
-            // delete (the key-removal below already took it out)
-            val upserts = withPid(derived(
-              delta.filter(col("_change_type") =!= "delete")
-                .drop("_change_type")), pNow)
-            val parts = VersionedTable.parts(dstRoot)
-            val existing: DataFrame = {
-              val dirs = touched.toSeq.sorted
-                .flatMap(k => parts.getOrElse(k.toString, Nil))
-                .map(rel => java.nio.file.Paths.get(dstRoot, rel).toString)
-              if (dirs.isEmpty) upserts.limit(0)
-              else {
-                // destination rows read under the DESTINATION schema
-                // (= source schema for plain replication, transform
-                // output schema for derived tables)
-                val reader = schemaDdl
-                  .map(d => spark.read.schema(
-                    org.apache.spark.sql.types.StructType.fromDDL(d)))
-                  .getOrElse(spark.read)
-                withPid(reader.parquet(dirs: _*), pNow)
+          VersionedTable.withWriterIntent(dstRoot) { renew =>
+            var attempt = 0
+            var done = false
+            while (!done) {
+              attempt += 1
+              renew()
+              val pNow = effP
+              val withP = withPid(delta, pNow)
+              val touched = withP.select(Pid).distinct().collect()
+                .map(_.getInt(0)).toSet // bounded by the partition count
+              // the rows coming back in: insert/update post-images,
+              // through the derivation — a post-image the transform
+              // filters out simply doesn't return, which IS the derived
+              // delete (the key-removal below already took it out)
+              val upserts = withPid(derived(
+                delta.filter(col("_change_type") =!= "delete")
+                  .drop("_change_type")), pNow)
+              val parts = VersionedTable.parts(dstRoot)
+              val existing: DataFrame = {
+                val dirs = touched.toSeq.sorted
+                  .flatMap(k => parts.getOrElse(k.toString, Nil))
+                  .map(rel => java.nio.file.Paths.get(dstRoot, rel).toString)
+                if (dirs.isEmpty) upserts.limit(0)
+                else {
+                  // destination rows read under the DESTINATION schema
+                  // (= source schema for plain replication, transform
+                  // output schema for derived tables)
+                  val reader = schemaDdl
+                    .map(d => spark.read.schema(
+                      org.apache.spark.sql.types.StructType.fromDDL(d)))
+                    .getOrElse(spark.read)
+                  withPid(reader.parquet(dirs: _*), pNow)
+                }
               }
-            }
-            // replace-or-drop by pk: every changed key's old rows
-            // leave, surviving (transformed) post-images come back in
-            val merged = existing
-              .join(withP.select(col(pk)).distinct(), Seq(pk), "left_anti")
-              .unionByName(upserts)
-            val staged = VersionedTable.stagePartitioned(merged, dstRoot, Pid)
-            // a touched partition with NO surviving rows (every key
-            // deleted) stages nothing — drop its label explicitly or
-            // the old dir would ride the manifest and resurrect rows
-            val emptied = touched.map(_.toString) -- staged.keySet
-            beforeCommit()
-            try {
-              VersionedTable.commitPartitions(staged, dstRoot,
-                batchId = nsTxn(head), schemaDdl = schemaDdl,
-                dropParts = emptied, nParts = Some(pNow),
-                followSrc = Some(sid),
-                writerKind = VersionedTable.KindFollower)
-              done = true
-            } catch {
-              case e: VersionedTable.PartitionCountChanged =>
-                if (attempt >= 3) throw e
+              // replace-or-drop by pk: every changed key's old rows
+              // leave, surviving (transformed) post-images come back in
+              val merged = existing
+                .join(withP.select(col(pk)).distinct(), Seq(pk), "left_anti")
+                .unionByName(upserts)
+              val staged = VersionedTable.stagePartitioned(merged, dstRoot, Pid)
+              // a touched partition with NO surviving rows (every key
+              // deleted) stages nothing — drop its label explicitly or
+              // the old dir would ride the manifest and resurrect rows
+              val emptied = touched.map(_.toString) -- staged.keySet
+              beforeCommit()
+              try {
+                VersionedTable.commitPartitions(staged, dstRoot,
+                  batchId = nsTxn(head), schemaDdl = schemaDdl,
+                  dropParts = emptied, nParts = Some(pNow),
+                  followSrc = Some(sid),
+                  writerKind = VersionedTable.KindFollower)
+                done = true
+              } catch {
+                case e: VersionedTable.PartitionCountChanged =>
+                  if (attempt >= 3) throw e
+              }
             }
           }
         }
